@@ -270,6 +270,35 @@ class RelationalSpec extends AnyFunSuite {
     assert(n1 >= n2 && n2 >= n3, "funnel must be monotone")
   }
 
+  test("generated classes survive a repeat: the codegen cache is sized by the build") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the flag reaches this forked JVM: the session sees build.sbt's value
+    val built = "-Dspark\\.sql\\.codegen\\.cache\\.maxEntries=(\\d+)".r
+      .findFirstMatchIn(java.nio.file.Files.readString(java.nio.file.Paths.get("build.sbt")))
+      .map(_.group(1).toInt)
+    assert(built.exists(_ > 100), "build.sbt must size spark.sql.codegen.cache.maxEntries")
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries").toInt == built.get)
+    // q03..q18 generate 141 distinct classes here, more than Spark's
+    // default cache (100) holds: at the default the repeat recompiles ~125
+    // of them. The cache is keyed by the generated source, so queries
+    // whose source varies between runs stay out: q49 (AQE numbers its
+    // codegen stages in completion order) and q57 (Spark numbers its two
+    // distinct-aggregate groups in hash order of fresh expression ids)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => (3 to 18).contains(n.drop(1).takeWhile(_.isDigit).toInt))
+    def compilesOfOneRound(): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      names.foreach { n =>
+        SparkEntry.queries(n)(spark, sf).collect()
+        operators.Caches.release()
+        spark.catalog.clearCache()
+      }
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    compilesOfOneRound()
+    assert(compilesOfOneRound() == 0, s"${names.mkString(",")} recompiled on a repeat")
+  }
+
   test("fkOrphans n_rows is the plain fact count even when the dim PK is duplicated") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
